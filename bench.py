@@ -219,17 +219,23 @@ def main() -> None:
 
         stream_names = sorted(k for k in timings if k.startswith("streaming_"))
         if stream_names:
-            r = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--warm-streaming-child", sf_dir, *stream_names],
-                capture_output=True, text=True,
-                env={**os.environ, "PYTHONPATH": here},
-            )
-            line = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "{}"
             try:
-                detail["warm"] = json.loads(line)
-            except json.JSONDecodeError:
-                detail["warm_error"] = r.stderr[-1500:]
+                r = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__),
+                     "--warm-streaming-child", sf_dir, *stream_names],
+                    capture_output=True, text=True,
+                    env={**os.environ, "PYTHONPATH": here},
+                    timeout=max(1, budget - (time.perf_counter() - t0)),
+                )
+            except subprocess.TimeoutExpired as e:
+                # the summary line below must still print within the budget
+                detail["warm_error"] = f"warm tier timed out after {e.timeout:.0f}s"
+            else:
+                line = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "{}"
+                try:
+                    detail["warm"] = json.loads(line)
+                except json.JSONDecodeError:
+                    detail["warm_error"] = r.stderr[-1500:]
     elif os.environ.get("SPARK_GRAFT_BENCH_WARM_STREAMING", "1") != "0":
         detail["warm_skipped"] = (
             f"budget: {time.perf_counter() - t0:.0f}s elapsed + ~{est_warm:.0f}s "

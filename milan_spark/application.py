@@ -400,48 +400,53 @@ class Application:
             return self._run_streaming_inner(spark, compile_node_streaming)
 
     def _run_streaming_inner(self, spark: SparkSession, compile_node_streaming):
+        from milan_spark.streaming import await_query, file_sink, run_to_memory
+
         bound = {sid: self._resolve_streaming(spark, sid) for sid in self.sources}
         # file-backed side queries START first and are awaited together at
         # the end — N sinks run concurrently, not serialized (the reference
         # submits one job with all sinks attached); memory sinks stay
         # blocking by design (the bounded test-harness shape)
         started = []
-        for entry in self.lineage_sinks:
-            sub = compile_node_streaming(
-                self._find_node(entry["stream_id"]), spark, source_overrides=bound
-            )
-            started.extend(self._write_lineage(sub, entry) or [])
-        for entry in self.sinks:
-            sub = compile_node_streaming(
-                self._find_node(entry["stream_id"]), spark, source_overrides=bound
-            )
-            # per-OPERATION state-store scoping: each StreamingQuery clones
-            # the session conf at start(), so setting the provider around a
-            # single sink's start scopes its state stores to that query
-            # alone — the engine's realization of the reference's
-            # per-operation stateStores configuration
-            # (ApplicationConfiguration.scala:121-154, which attaches a
-            # StateStore choice to individual operation names)
-            with _state_store_scope(spark, entry.get("state_store")):
-                if entry["kind"] == "memory":
-                    from milan_spark.streaming import run_to_memory
-
-                    run_to_memory(
-                        sub, entry["name"], output_mode=entry.get("output_mode", "append")
-                    )
-                else:
-                    from milan_spark.streaming import file_sink
-
-                    started.append(
-                        file_sink(
-                            sub,
-                            entry["path"],
-                            fmt=entry.get("fmt", "parquet"),
-                            output_mode=entry.get("output_mode", "append"),
+        try:
+            for entry in self.lineage_sinks:
+                sub = compile_node_streaming(
+                    self._find_node(entry["stream_id"]), spark, source_overrides=bound
+                )
+                started.extend(self._write_lineage(sub, entry) or [])
+            for entry in self.sinks:
+                sub = compile_node_streaming(
+                    self._find_node(entry["stream_id"]), spark, source_overrides=bound
+                )
+                # per-OPERATION state-store scoping: each StreamingQuery clones
+                # the session conf at start(), so setting the provider around a
+                # single sink's start scopes its state stores to that query
+                # alone — the engine's realization of the reference's
+                # per-operation stateStores configuration
+                # (ApplicationConfiguration.scala:121-154, which attaches a
+                # StateStore choice to individual operation names)
+                with _state_store_scope(spark, entry.get("state_store")):
+                    if entry["kind"] == "memory":
+                        run_to_memory(
+                            sub, entry["name"], output_mode=entry.get("output_mode", "append")
                         )
-                    )
-        for q in started:
-            q.awaitTermination(300)
+                    else:
+                        started.append(
+                            file_sink(
+                                sub,
+                                entry["path"],
+                                fmt=entry.get("fmt", "parquet"),
+                                output_mode=entry.get("output_mode", "append"),
+                            )
+                        )
+            for q in started:
+                await_query(q, 300)
+        finally:
+            # a failed start or a timed-out await leaves the other side
+            # queries running; nothing may outlive this call
+            for q in started:
+                if q.isActive:
+                    q.stop()
         sdf = compile_node_streaming(self.plan, spark, source_overrides=bound)
         if self.metrics:
             # streaming metric attachment: Dataset.observe with a NAME (the
@@ -454,15 +459,11 @@ class Application:
             )
         kind = self.sink.get("kind", "none")
         if kind == "memory":
-            from milan_spark.streaming import run_to_memory
-
             with _state_store_scope(spark, self.sink.get("state_store")):
                 return run_to_memory(
                     sdf, self.sink["name"], output_mode=self.sink.get("output_mode", "append")
                 )
         if kind == "file":
-            from milan_spark.streaming import file_sink
-
             with _state_store_scope(spark, self.sink.get("state_store")):
                 return file_sink(
                     sdf,
@@ -473,8 +474,7 @@ class Application:
         if kind in ("kinesis", "sqs", "dynamodb_table"):
             from milan_spark.sources.queues import open_queue_sink
 
-            q = open_queue_sink(sdf, self.sink)
-            q.awaitTermination(300)
+            await_query(open_queue_sink(sdf, self.sink), 300)
             return sdf
         return sdf
 

@@ -35,6 +35,12 @@ class MilanEmptyStreamError(RuntimeError):
     streams at sf1 for three rounds."""
 
 
+class MilanStreamTimeoutError(TimeoutError):
+    """A streaming query did not terminate within the time its caller
+    allowed (``streaming.await_query``). The query was stopped, so any sink
+    it wrote holds a partial result; callers must not read it as complete."""
+
+
 class MilanConcurrentCommitError(RuntimeError):
     """Two writers raced to commit the same version of a versioned table
     and this one lost (its manifest claim found the slot taken). The

@@ -14,10 +14,40 @@ import sys
 
 from pyspark.sql import SparkSession
 
+_COMPAT_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "compat")
 # Directory whose presence on sys.path/PYTHONPATH makes ``google.protobuf``
 # importable via the vendored gcloud runtime (see compat/pbshim).
-_PBSHIM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "compat", "pbshim")
+_PBSHIM_DIR = os.path.join(_COMPAT_DIR, "pbshim")
 _VENDORED_PB = "/usr/lib/google-cloud-sdk/lib/third_party/cloudsdk/google/protobuf"
+# Directory holding the Python worker daemon module (compat/daemon).
+_DAEMON_DIR = os.path.join(_COMPAT_DIR, "daemon")
+DAEMON_MODULE = "milan_daemon"
+
+
+def _add_worker_path(path: str) -> None:
+    """Prepend ``path`` to ``PYTHONPATH``, which the JVM — and through it
+    every Python worker — inherits when it launches."""
+    parts = os.environ.get("PYTHONPATH", "")
+    if path not in parts.split(os.pathsep):
+        os.environ["PYTHONPATH"] = path + (os.pathsep + parts if parts else "")
+
+
+def _workers_see(path: str) -> bool:
+    """Whether Spark's Python workers will have ``path`` on their path. They
+    get the JVM's PYTHONPATH, frozen at JVM launch: read it from the running
+    JVM, or from this process's environment before the JVM starts. A JVM
+    that launched this process (spark-submit) has an environment this
+    process cannot see yet: answer False."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is None:
+        if "PYSPARK_GATEWAY_PORT" in os.environ:
+            return False
+        pp = os.environ.get("PYTHONPATH", "")
+    else:
+        pp = gateway.jvm.java.lang.System.getenv("PYTHONPATH") or ""
+    return path in pp.split(os.pathsep)
 
 
 def ensure_protobuf() -> bool:
@@ -41,11 +71,7 @@ def ensure_protobuf() -> bool:
         return False
     if _PBSHIM_DIR not in sys.path:
         sys.path.insert(0, _PBSHIM_DIR)
-    parts = os.environ.get("PYTHONPATH", "")
-    if _PBSHIM_DIR not in parts.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _PBSHIM_DIR + (os.pathsep + parts if parts else "")
-        )
+    _add_worker_path(_PBSHIM_DIR)
     try:
         import google.protobuf  # noqa: F401
 
@@ -82,16 +108,7 @@ def workers_can_import_protobuf() -> bool:
     origin = (getattr(_pb, "__file__", "") or "") + str(getattr(_pb, "__path__", ""))
     if "cloudsdk" not in origin and "pbshim" not in origin:
         return True
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return _PBSHIM_DIR in os.environ.get("PYTHONPATH", "").split(os.pathsep)
-    try:
-        jvm_pp = sc._jvm.java.lang.System.getenv("PYTHONPATH") or ""
-    except Exception:
-        return False
-    return _PBSHIM_DIR in jvm_pp.split(os.pathsep)
+    return _workers_see(_PBSHIM_DIR)
 
 
 def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -100,8 +117,21 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
     On a real cluster the master/memory settings are supplied by spark-submit;
     everything set here is cluster-safe.
+
+    Python workers start from the engine's daemon module
+    (``compat/daemon/milan_daemon.py``: cheap task launch on CPython < 3.12)
+    whenever the workers can import it — always for a JVM this call launches.
+
+    Stateful streaming queries do not use the batch
+    ``spark.sql.shuffle.partitions`` set here for their state stores: every
+    sink in ``milan_spark.streaming`` starts through
+    ``streaming.start_query``, which pins a stateful query's state-partition
+    count to ``SPARK_GRAFT_STREAM_PARTITIONS`` or, by default, one wave of
+    tasks, ``min(8, defaultParallelism)``. Stateless queries keep the batch
+    count.
     """
     ensure_protobuf()  # before the JVM exists, so workers inherit the path
+    _add_worker_path(_DAEMON_DIR)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         try:
@@ -130,6 +160,8 @@ def get_spark(app_name: str = "milan_spark", shuffle_partitions: int | None = No
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    if _workers_see(_DAEMON_DIR):
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

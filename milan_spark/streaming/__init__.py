@@ -27,39 +27,111 @@ Stateful per-record operators (enrichment joins, scans) live in
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
-from contextlib import contextmanager
 from typing import Callable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from milan_spark.errors import MilanEmptyStreamError, MilanStreamTimeoutError
 
 
-@contextmanager
-def _provider_scope(sdf: DataFrame):
-    """Start-time state-store provider scoping: a query whose plan contains a
-    TransformWithState node must start under the RocksDB provider; everything
-    else keeps the session default (and its lighter per-microbatch commit).
-    The provider — like shuffle partitions — is captured into the query's
-    cloned conf at ``start()``, so setting it around the start and restoring
-    immediately scopes it to exactly this query."""
+def stream_partitions(spark: SparkSession) -> int:
+    """State-store partition count for a new streaming query:
+    ``SPARK_GRAFT_STREAM_PARTITIONS`` when set, else one wave of tasks,
+    ``min(8, defaultParallelism)``. Every state partition costs a store
+    open/commit and a task (for Python state machines, a Python task launch)
+    per microbatch, so a second wave only adds fixed cost at small state."""
+    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
+    return int(env) if env else min(8, spark.sparkContext.defaultParallelism)
+
+
+# analyzed-plan nodes that keep state across microbatches when streaming
+# (a Join is stateful only when both of its sides stream)
+_STATEFUL_NODES = frozenset(
+    {
+        "Aggregate",
+        "Distinct",
+        "Deduplicate",
+        "DeduplicateWithinWatermark",
+        "FlatMapGroupsWithState",
+        "FlatMapGroupsInPandasWithState",
+        "TransformWithState",
+        "TransformWithStateInPySpark",
+        "GlobalLimit",
+    }
+)
+
+
+def has_state(sdf: DataFrame) -> bool:
+    """True when the streaming plan of ``sdf`` has an operator that keeps
+    state stores."""
+    stack = [sdf._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        seq = node.children()
+        children = [seq.apply(i) for i in range(seq.size())]
+        if node.isStreaming() and (
+            node.nodeName() in _STATEFUL_NODES
+            or node.nodeName() == "Join"
+            and all(c.isStreaming() for c in children)
+        ):
+            return True
+        stack.extend(children)
+    return False
+
+
+def start_query(sdf: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` (a ``sdf.writeStream`` chain) — the one start path of
+    every streaming sink in the engine. A stateful query gets its state
+    stores pinned to :func:`stream_partitions`.
+
+    A streaming query clones the session conf at ``start()`` and records two
+    values of it for its checkpoint's life: ``spark.sql.shuffle.partitions``
+    as its state-store count, and the state-store provider. Each one this
+    query needs is set around the start and restored right after, so batch
+    sizing and the session provider stay untouched, and a restart from an
+    existing checkpoint keeps what it recorded. A stateless query keeps the
+    batch count, so the batch jobs its ``foreachBatch`` body runs (upsert
+    merges, cycle hops) stay as wide as any other batch job. A query whose plan
+    contains a TransformWithState node must start under the RocksDB
+    provider; every other query keeps the session's (and its lighter
+    per-microbatch commit).
+    """
     from milan_spark.streaming.stateful import _ROCKSDB, needs_rocksdb
 
     spark = sdf.sparkSession
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    need = needs_rocksdb(sdf) and (prev is None or "RocksDB" not in prev)
-    if need:
-        spark.conf.set(key, _ROCKSDB)
+    scoped = {}
+    if has_state(sdf):
+        scoped["spark.sql.shuffle.partitions"] = str(stream_partitions(spark))
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    if needs_rocksdb(sdf) and "RocksDB" not in (spark.conf.get(provider_key, None) or ""):
+        scoped[provider_key] = _ROCKSDB
+    prev = {key: spark.conf.get(key, None) for key in scoped}
+    for key, value in scoped.items():
+        spark.conf.set(key, value)
     try:
-        yield
+        return writer.start()
     finally:
-        if need:
-            if prev is None:
+        for key, value in prev.items():
+            if value is None:
                 spark.conf.unset(key)
             else:
-                spark.conf.set(key, prev)
+                spark.conf.set(key, value)
+
+
+def await_query(q: StreamingQuery, timeout_sec: float) -> None:
+    """Wait for ``q`` to terminate; re-raise its failure, or stop it and
+    raise :class:`MilanStreamTimeoutError` when ``timeout_sec`` expires
+    first (a timeout under 1 ms waits 1 ms)."""
+    if not q.awaitTermination(max(timeout_sec, 0.001)):
+        q.stop()
+        raise MilanStreamTimeoutError(
+            f"streaming query {q.name or q.id} did not terminate within "
+            f"{timeout_sec}s; it was stopped and its output is partial"
+        )
 
 
 # per-microbatch StreamingQueryProgress dicts of the most recent
@@ -105,7 +177,6 @@ def run_to_memory(
     *,
     output_mode: str = "append",
     timeout_sec: int = 300,
-    state_partitions: int | None = None,
     require_input: bool = True,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into an in-memory table and
@@ -113,50 +184,31 @@ def run_to_memory(
     process-global sink then await expected counts; availableNow + await
     replaces the polling).
 
-    ``state_partitions`` sizes the query's state stores (a streaming query
-    pins its state-store count to ``spark.sql.shuffle.partitions`` at start,
-    for the life of the checkpoint). That count should be an explicit choice
+    A stateful query pins its state-store count to
+    ``spark.sql.shuffle.partitions`` at start, for the life of the
+    checkpoint. That count should be an explicit choice
     sized to key cardinality and cluster width — not inherited from batch
     shuffle sizing, which optimizes a different trade-off (every extra state
-    partition costs a store open/commit per microbatch). Default comes from
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` (8 — right for local test volumes; a
-    1000-executor deployment sets it to cores×executors before first start).
-    The reference makes the same decision per-operator via Flink parallelism,
-    pinning sources to 1 (DataSourceUtil.scala:58-60) — here every operator
-    stays fully parallel.
-    """
-    spark = sdf.sparkSession
-    if state_partitions is None:
-        state_partitions = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        # the query clones the session conf at start(); restoring right after
-        # leaves batch sizing untouched
-        with _provider_scope(sdf):
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination(timeout_sec)
-    try:
-        import json as _json
+    partition costs a store open/commit and a task per microbatch). Every
+    sink in this module starts through :func:`start_query`, which pins it to
+    ``SPARK_GRAFT_STREAM_PARTITIONS`` when set, else to one wave of tasks:
+    ``min(8, defaultParallelism)`` (a 1000-executor deployment sets the
+    variable to cores×executors before first start). The reference makes the
+    same decision per-operator via Flink parallelism, pinning sources to 1
+    (DataSourceUtil.scala:58-60) — here every operator stays fully parallel.
 
-        raw = []
-        for p in q.recentProgress or []:
-            if isinstance(p, dict):
-                raw.append(p)
-            else:  # StreamingQueryProgress object: .json is a str or method
-                j = getattr(p, "json", None)
-                raw.append(_json.loads(j if isinstance(j, str) else j()))
-        _LAST_PROGRESS[:] = raw
-    except Exception:
-        _LAST_PROGRESS[:] = []
+    Raises :class:`MilanStreamTimeoutError` (after stopping the query) when
+    it has not finished within ``timeout_sec``.
+    """
+    w = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    q = start_query(sdf, w)
+    await_query(q, timeout_sec)
+    _LAST_PROGRESS[:] = [json.loads(p.json) for p in q.recentProgress]
     if require_input and _sources_never_advanced(_LAST_PROGRESS):
         # permanent tripwire for the silent-empty-source class of bug (the
         # round-5–8 sf1 regression: a staging symlink produced an empty
@@ -166,8 +218,6 @@ def run_to_memory(
         # nothing, while a query whose filters were pushed into the scan
         # legitimately reports numInputRows == 0 yet still commits offsets.
         # Opt out (require_input=False) only for deliberately-empty fixtures.
-        from milan_spark.errors import MilanEmptyStreamError
-
         raise MilanEmptyStreamError(
             f"streaming query {name!r} completed with NO source ever "
             "advancing its offset — every source is empty or mis-staged "
@@ -211,14 +261,12 @@ def file_sink(
         w = w.options(**options)
     if available_now:
         w = w.trigger(availableNow=True)
-    with _provider_scope(sdf):
-        return w.start()
+    return start_query(sdf, w)
 
 
 def console_sink(sdf: DataFrame, *, output_mode: str = "append") -> StreamingQuery:
     """ref: ConsoleDataSink.scala:15."""
-    with _provider_scope(sdf):
-        return sdf.writeStream.format("console").outputMode(output_mode).start()
+    return start_query(sdf, sdf.writeStream.format("console").outputMode(output_mode))
 
 
 def foreach_batch_sink(
@@ -233,8 +281,7 @@ def foreach_batch_sink(
     w = sdf.writeStream.foreachBatch(fn).outputMode(output_mode)
     if available_now:
         w = w.trigger(availableNow=True)
-    with _provider_scope(sdf):
-        return w.start()
+    return start_query(sdf, w)
 
 
 def merge_parquet_batch(
@@ -335,5 +382,4 @@ def upsert_sink(
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    with _provider_scope(sdf):
-        return w.start()
+    return start_query(sdf, w)

@@ -38,6 +38,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from milan_spark.streaming import await_query, start_query
+
 
 class CycleDiverged(RuntimeError):
     pass
@@ -149,17 +151,15 @@ def streaming_cycle(
             )
 
     src = spark.readStream.schema(schema).parquet(feedback_dir)
-    q = (
-        src.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .start()
+    q = start_query(
+        src, src.writeStream.foreachBatch(handle).option("checkpointLocation", ckpt)
     )
     try:
         # returns when a microbatch produced no new files — the fixpoint
         q.processAllAvailable()
     finally:
         q.stop()
-        q.awaitTermination(timeout_sec)
+        await_query(q, timeout_sec)
     return spark.read.schema(schema).parquet(feedback_dir)
 
 

@@ -355,3 +355,26 @@ def test_per_sink_state_store_scoping(spark, tmp_path):
     app.sinks[0]["state_store"] = "dynamo"
     with pytest.raises(ValueError, match="state_store"):
         app.validate()
+
+
+def test_failed_streaming_run_stops_started_side_queries(spark, tmp_path, monkeypatch):
+    # the lineage file sink starts first and is awaited last; when a later
+    # sink fails in between, run_streaming must not leave it running
+    import milan_spark.streaming as streaming
+
+    real_file_sink = streaming.file_sink
+    monkeypatch.setattr(
+        streaming,
+        "file_sink",
+        lambda *a, **kw: real_file_sink(*a, available_now=False, **kw),
+    )
+
+    def failing_run_to_memory(*a, **kw):
+        raise RuntimeError("memory sink failed")
+
+    monkeypatch.setattr(streaming, "run_to_memory", failing_run_to_memory)
+    app = _lineage_bundle(str(tmp_path))
+    app.sinks = [{"stream_id": app.plan.node_id, "kind": "memory", "name": "side_out"}]
+    with pytest.raises(RuntimeError, match="memory sink failed"):
+        app.run_streaming(spark)
+    assert spark.streams.active == []
